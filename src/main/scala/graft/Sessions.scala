@@ -2,13 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** THE engine session config, in one place. Bench (the timed runs),
-  * Verify (the correctness gate) and the dev plan dumper (`DevPlan`,
-  * the committed before/after plan evidence) must all run the same
-  * session — round 9 duplicated the config across the three and the
-  * advisor caught the drift risk: DevPlan was missing the two
-  * shuffled-hash-join knobs, so committed plan evidence could show a
-  * different join strategy than the bench actually executes.
+/** THE engine session config, in one place, and the only
+  * `SparkSession.builder()` in main code. Bench (the timed runs), Verify
+  * (the correctness gate), the CLI, the dev plan dumper (`DevPlan`, the
+  * committed before/after plan evidence) and the flowbench harness all
+  * build their session here, so none can drift from the others — a copy
+  * that lacked the two shuffled-hash-join knobs would plan a different
+  * join strategy than the bench executes. The CLI alone may override
+  * the master (`SPARK_GRAFT_MASTER`), a deployment setting.
   *
   * Knobs (all env-overridable, local defaults keep the driver's bench
   * comparable; production values are a cluster submit's concern):

@@ -22,16 +22,12 @@ object Main {
       case Seq(k) if k.startsWith("--") => k.stripPrefix("--") -> "true"
     }.toMap
 
+  /** The shared engine session; `SPARK_GRAFT_MASTER` points it at a
+    * cluster instead of `local[SPARK_GRAFT_CPUS]`.
+    */
   private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    SparkSession.builder()
-      .withExtensions(new graft.expr.GraftExtensions)
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val b = graft.Sessions.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    sys.env.get("SPARK_GRAFT_MASTER").fold(b)(b.master).appName("graft")
       .getOrCreate()
   }
 

@@ -25,10 +25,11 @@ import scala.jdk.CollectionConverters._
   *  4. normalize + resolve against the fields catalog; unresolved
   *     columns are appended to the catalog with empty metadata
   *     (write-back, `run_annotate.py:293-307`)
-  *  5. compile commands: cols = resolved columns in file order; melt if
-  *     ALL of a file's unresolved columns sit inside one variable-column
-  *     group (subset-containment, first match — `run_annotate.py:200`,
-  *     kept per SURVEY §1.5.4)
+  *  5. compile commands through [[Lowering]], shared with the
+  *     classification dialect: cols = resolved columns in file order;
+  *     melt if ALL of a file's variable columns sit inside one
+  *     variable-column group (subset-containment, first match —
+  *     `run_annotate.py:200`, kept per SURVEY §1.5.4)
   */
 object Annotator {
 
@@ -100,31 +101,15 @@ object Annotator {
     out.result().sorted
   }
 
-  /** Header columns of one file via the sniffer's head sample. */
+  /** Header columns of one file from the sniffer's head sample: the
+    * quote-aware split (a quoted header cell may contain the separator)
+    * sees the same columns Spark's CSV reader will.
+    */
   def headerColumns(root: String, relPath: String,
                     conf: Configuration = new Configuration())
-      : Seq[String] = {
-    val full = s"${root.stripSuffix("/")}/$relPath"
-    val lines = {
-      // reuse the sniffing sample for both sep + header; quote-aware
-      // split (a quoted header cell may contain the separator) so the
-      // compiled catalog sees the same columns Spark's CSV reader will
-      val sep = Sniffer.sniffSep(full, conf)
-      val head = firstLine(full, conf)
-      Sniffer.splitLine(head, sep.head)
-    }
-    lines.map(_.trim)
-  }
-
-  private def firstLine(path: String, conf: Configuration): String = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val raw = fs.open(p)
-    val in = if (path.endsWith(".gz"))
-      new java.util.zip.GZIPInputStream(raw) else raw
-    val r = new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8"))
-    try Option(r.readLine()).getOrElse("") finally r.close()
-  }
+      : Seq[String] =
+    Sniffer.sniffHeader(s"${root.stripSuffix("/")}/$relPath", conf)
+      .map(_.trim)
 
   case class Result(manifest: EngineManifest, catalog: FieldsCatalog,
                     newColumns: Seq[String])
@@ -149,70 +134,35 @@ object Annotator {
     // 3.+4. columns + resolution + write-back
     var cat = catalog
     val newCols = Seq.newBuilder[String]
-    def resolveCols(cols: Seq[String], file: String): Seq[ColMeta] =
-      cols.flatMap { c =>
-        val norm = FieldsCatalog.norm(c)
-        cat.resolve(c, config.process, file) match {
-          case Some(e) => Some(ColMeta(norm,
-            Some(e.name).filter(_.nonEmpty), Some(e.desc).filter(_.nonEmpty)))
-          case None =>
-            cat = cat ++ FieldsCatalog(Seq(FieldEntry(norm)))
-            newCols += norm
-            Some(ColMeta(norm))
-        }
-      }
-
-    /** Split a file's columns into (standard, melt spec): columns in a
-      * variable-column group fold; the file melts iff ALL its variable
-      * columns sit in ONE group (subset containment, first match —
-      * `run_annotate.py:200`); a spread across groups is an error
-      * (SURVEY §1.5.4: keep semantics, validate ambiguity).
-      */
-    def splitCols(cols: Seq[String], file: String)
-        : (Seq[String], Option[MeltSpec]) = {
-      val groupsNorm = config.variableColumns
-        .map(g => g -> g.columns.map(FieldsCatalog.norm))
-      val norm = cols.map(FieldsCatalog.norm)
-      val varCols = norm.filter(c => groupsNorm.exists(_._2.contains(c)))
-      if (varCols.isEmpty) (cols, None)
-      else groupsNorm.find { case (_, gc) => varCols.forall(gc.contains) } match {
-        case None => throw new IllegalArgumentException(
-          s"file $file has variable columns spanning multiple groups: $varCols")
-        case Some((g, gc)) =>
-          (cols.filterNot(c => gc.contains(FieldsCatalog.norm(c))),
-            Some(MeltSpec(
-              key = Some(MeltEnd(g.name, g.desc)),
-              value = Some(MeltEnd(g.valueName, g.valueDesc)),
-              valueColumns = varCols)))
+    def resolve(file: String)(c: String): ColMeta = {
+      val norm = FieldsCatalog.norm(c)
+      cat.resolve(c, config.process, file) match {
+        case Some(e) => ColMeta(norm,
+          Some(e.name).filter(_.nonEmpty), Some(e.desc).filter(_.nonEmpty))
+        case None =>
+          cat = cat ++ FieldsCatalog(Seq(FieldEntry(norm)))
+          newCols += norm
+          ColMeta(norm)
       }
     }
+    val colGroups = config.variableColumns.map(g => ColumnGroup(g.columns,
+      MeltEnd(g.name, g.desc), MeltEnd(g.valueName, g.valueDesc)))
 
-    def targetFor(source: String): String =
-      source.split('/').last
-        .replaceAll("\\.(txt|csv|tsv)(\\.gz)?$", "") + ".parquet"
-
-    val standardCmds = standard.map { f =>
-      val cols = headerColumns(inputDir, f, conf)
-      val (std, melt) = splitCols(cols, f)
-      Command(
-        source = f, target = targetFor(f),
-        cols = resolveCols(std, f.split('/').last),
-        melt = melt)
+    // 5. compile: the sample file's header lowers the whole command
+    def lower(source: String, sample: String, name: Option[String] = None,
+              desc: Option[String] = None,
+              tokens: Seq[TokenSpec] = Nil): Command = {
+      val (cols, melt) = Lowering.split(headerColumns(inputDir, sample, conf),
+        colGroups, resolve(sample.split('/').last), s"file $sample")
+      Command(source = source, target = Lowering.targetFor(source),
+        name = name, desc = desc, cols = cols, tokens = tokens, melt = melt)
     }
+    val standardCmds = standard.map(f => lower(f, f))
     val variableCmds = groups.map { case (spec, matched) =>
-      val cols = headerColumns(inputDir, matched.head, conf)
-      val (std, melt) = splitCols(cols, matched.head)
       // dedupe tokens by name (SURVEY §1.5.8 decision)
-      val toks = Tokens.tokenNames(spec.pattern).distinct.map { t =>
-        spec.tokens.find(_.token.stripPrefix("[").stripSuffix("]")
-          .equalsIgnoreCase(t)).getOrElse(TokenSpec(t))
-      }
-      Command(
-        source = spec.pattern, target = targetFor(spec.pattern),
-        name = spec.name, desc = spec.desc,
-        cols = resolveCols(std, matched.head.split('/').last),
-        tokens = toks,
-        melt = melt)
+      lower(spec.pattern, matched.head, spec.name, spec.desc,
+        Tokens.tokenNames(spec.pattern).distinct.map(t =>
+          Tokens.specFor(spec.tokens, t).getOrElse(TokenSpec(t))))
     }
 
     Result(EngineManifest(standardCmds ++ variableCmds), cat,

@@ -49,12 +49,11 @@ object Runner {
     cmd.melt.foreach { spec =>
       // ids = projected standard cols + token cols; everything else melts
       // (`run_annotate.py:202-211`: melt folds the variable-column group)
-      val tokenCols = Tokens.tokenNames(resolved)
       val ids =
         if (spec.valueColumns.nonEmpty)
           df.columns.toSeq.filterNot(spec.valueColumns.contains)
         else (cmd.cols.map(m => FieldsCatalog.norm(m.col)) ++
-          tokenCols.map(_.toLowerCase) ++ tokenCols)
+          Tokens.tokenNames(resolved).map(Tokens.columnName(cmd.tokens, _)))
           .distinct.filter(df.columns.contains)
       df = Melt(df, spec, ids)
     }

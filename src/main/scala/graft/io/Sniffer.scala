@@ -28,9 +28,16 @@ object Sniffer {
     * `run_annotate.py:259`). Falls back to comma for single-column files.
     */
   def sniffSep(path: String, conf: Configuration = new Configuration())
-      : String = {
+      : String =
+    sniffFromLines(sampleLines(path, conf)).toString
+
+  /** Header cells of the file at `path`, split on the separator sniffed
+    * from the same head sample (one open per file).
+    */
+  def sniffHeader(path: String, conf: Configuration = new Configuration())
+      : Seq[String] = {
     val lines = sampleLines(path, conf)
-    sniffFromLines(lines).toString
+    splitLine(lines.headOption.getOrElse(""), sniffFromLines(lines))
   }
 
   def sniffFromLines(lines: Seq[String]): Char = {
@@ -94,9 +101,6 @@ object Sniffer {
     out.result()
   }
 
-  private val NaSet = Set("", "NA", "N/A", "n/a", "NaN", "nan", "NULL",
-    "null", "None", "#N/A")
-
   /** Sample-based schema inference (the 100 TB path): Spark's
     * `inferSchema` is a SECOND full pass over every byte of the source;
     * at scale the honest alternative is typing from the head sample the
@@ -117,7 +121,7 @@ object Sniffer {
     val rows = lines.tail.map(splitLine(_, sep))
     val fields = header.zipWithIndex.map { case (name, i) =>
       val cells = rows.flatMap(_.lift(i)).map(_.trim)
-        .filterNot(NaSet.contains)
+        .filterNot(DsvReader.NaTokens.contains)
       // same lattice as Spark's CSV inference so the sample path yields
       // identical schemas on type-stable data: Int -> Long -> Double ->
       // String

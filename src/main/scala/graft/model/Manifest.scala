@@ -58,6 +58,46 @@ final case class Command(
 
 final case class EngineManifest(commands: Seq[Command])
 
+/** A variable-column group: its columns fold under `key`/`value`. */
+final case class ColumnGroup(columns: Seq[String], key: MeltEnd,
+                             value: MeltEnd)
+
+/** The per-command decisions, made once: the annotator and the
+  * classification dialect lower files through both, and the parser takes
+  * its default target from [[targetFor]].
+  */
+object Lowering {
+
+  /** Default parquet target of a source: its basename, DSV extension off. */
+  def targetFor(source: String): String =
+    source.split('/').last
+      .replaceAll("\\.(txt|csv|tsv)(\\.gz)?$", "") + ".parquet"
+
+  /** Split a file's columns into (standard, melt spec). A column is
+    * variable iff it sits in some group; the file melts iff ALL its
+    * variable columns sit in ONE group (subset containment, first match —
+    * `run_annotate.py:200`); a spread across groups is an error (SURVEY
+    * §1.5.4). Every other column is standard, in file order, with its
+    * metadata from `meta`.
+    */
+  def split(columns: Seq[String], groups: Seq[ColumnGroup],
+            meta: String => ColMeta, where: String)
+      : (Seq[ColMeta], Option[MeltSpec]) = {
+    val normGroups = groups.map(g => g -> g.columns.map(FieldsCatalog.norm).toSet)
+    val (varCols, std) = columns.partition(c =>
+      normGroups.exists(_._2(FieldsCatalog.norm(c))))
+    val normVar = varCols.map(FieldsCatalog.norm)
+    val melt = if (normVar.isEmpty) None
+      else normGroups.find(g => normVar.forall(g._2)) match {
+        case Some((g, _)) =>
+          Some(MeltSpec(Some(g.key), Some(g.value), normVar))
+        case None => throw new IllegalArgumentException(
+          s"$where: variable columns ${normVar.mkString(",")} span multiple groups")
+      }
+    (std.map(meta), melt)
+  }
+}
+
 /** Parser for all three manifest dialects. Driver-side only (plan
   * compilation, not data). Jackson ships with Spark (`/opt/spark/jars`).
   */
@@ -72,7 +112,8 @@ object ManifestParser {
 
   def parseNode(root: JsonNode): EngineManifest = {
     if (root.has("commands")) parseEmitted(root)
-    else if (root.has("dsv")) parseDsv(root)
+    else if (root.has("dsv"))
+      EngineManifest(root.get("dsv").elements.asScala.map(parseCommand).toSeq)
     else if (ManifestSchema.looksLikeClassification(root))
       // classification dialect: schema-validated (pointed errors at
       // parse time, not deep inside Spark), then lowered to commands
@@ -92,42 +133,26 @@ object ManifestParser {
     EngineManifest(flatten(root.get("commands")).map(parseCommand).toSeq)
   }
 
-  /** `dsv` dialect (`json/example/transform.json`): entries carry url,
-    * source, tokens, kwargs.read / kwargs.melt, cols.
+  /** One command of any dialect. The emitted dialect wraps fields in
+    * `{"command": "hot.Parquet", "params": {...}}` and calls the token
+    * list `concat` (`run_annotate.py:195`); the `dsv` dialect
+    * (`json/example/transform.json`) nests `read`/`melt` under `kwargs`.
     */
-  private def parseDsv(root: JsonNode): EngineManifest =
-    EngineManifest(root.get("dsv").elements.asScala.map { e =>
-      val kwargs = Option(e.get("kwargs"))
-      val read = kwargs.flatMap(k => Option(k.get("read"))).map(parseRead)
-        .getOrElse(ReadOpts())
-      val melt = kwargs.flatMap(k => Option(k.get("melt"))).map(parseMelt)
-      Command(
-        source = text(e, "source").getOrElse(fail(e, "source")),
-        target = text(e, "target").getOrElse(
-          defaultTarget(text(e, "source").getOrElse(""))),
-        name = text(e, "name"),
-        desc = text(e, "desc"),
-        cols = arr(e, "cols").map(parseColMeta),
-        tokens = arr(e, "tokens").map(parseToken),
-        melt = melt,
-        read = read,
-        where = text(e, "where"))
-    }.toSeq)
-
   private def parseCommand(n: JsonNode): Command = {
-    // emitted dialect wraps fields in {"command": "hot.Parquet", "params": {...}}
     val p = if (n.has("params")) n.get("params") else n
+    def kwarg(f: String): Option[JsonNode] =
+      Option(p.get("kwargs")).flatMap(k => Option(k.get(f)))
+        .orElse(Option(p.get(f)))
+    val source = text(p, "source").getOrElse(fail(p, "source"))
     Command(
-      source = text(p, "source").getOrElse(fail(p, "source")),
-      target = text(p, "target").getOrElse(
-        defaultTarget(text(p, "source").getOrElse(""))),
+      source = source,
+      target = text(p, "target").getOrElse(Lowering.targetFor(source)),
       name = text(p, "name"),
       desc = text(p, "desc"),
       cols = arr(p, "cols").map(parseColMeta),
-      // emitted dialect calls the token list "concat" (`run_annotate.py:195`)
       tokens = (arr(p, "concat") ++ arr(p, "tokens")).map(parseToken),
-      melt = Option(p.get("melt")).map(parseMelt),
-      read = Option(p.get("read")).map(parseRead).getOrElse(ReadOpts()),
+      melt = kwarg("melt").map(parseMelt),
+      read = kwarg("read").map(parseRead).getOrElse(ReadOpts()),
       where = text(p, "where"))
   }
 
@@ -163,11 +188,6 @@ object ManifestParser {
   private def arr(n: JsonNode, f: String): Seq[JsonNode] =
     Option(n.get(f)).filter(_.isArray)
       .map(_.elements.asScala.toSeq).getOrElse(Nil)
-
-  private def defaultTarget(source: String): String = {
-    val base = source.split('/').last
-    base.replaceAll("\\.(txt|csv|tsv)(\\.gz)?$", "") + ".parquet"
-  }
 
   private def fail(n: JsonNode, f: String): Nothing =
     throw new IllegalArgumentException(s"manifest entry missing '$f': $n")

@@ -11,10 +11,10 @@ import scala.jdk.CollectionConverters._
   * [[validate]] checks a document against the schema's semantics and
   * returns POINTED errors (JSON-path + problem) instead of letting a
   * malformed manifest fail deep inside Spark; [[compile]] lowers a valid
-  * document into engine [[Command]]s with the same classification rules
-  * the annotator applies (standard columns project+annotate; a file's
-  * variable columns melt under their group's key/value names;
-  * `[token]`s in a variable pattern become token columns).
+  * document into engine [[Command]]s through [[Lowering]], the annotator's
+  * own lowering (standard columns project+annotate; a file's variable
+  * columns melt under their group's key/value names; `[token]`s in a
+  * variable pattern become token columns).
   */
 object ManifestSchema {
 
@@ -82,58 +82,27 @@ object ManifestSchema {
     def opt(n: JsonNode, f: String): Option[String] =
       Option(n.get(f)).map(_.asText).filter(_.nonEmpty)
 
-    val stdMeta: Map[String, (Option[String], Option[String])] =
-      items("columns", "standard").map { e =>
-        e.get("column").asText ->
-          ((opt(e, "name"), opt(e, "desc")))
-      }.toMap
-    case class VarGroup(columns: Set[String], name: String,
-                        desc: Option[String])
-    val varGroups = items("columns", "variable").map(e =>
-      VarGroup(texts(e, "columns").toSet, e.get("name").asText,
-        opt(e, "desc")))
-
-    def colsAndMelt(columns: Seq[String], where: String)
-        : (Seq[ColMeta], Option[MeltSpec]) = {
-      val unresolved = columns.filterNot(stdMeta.contains)
-      val melt = if (unresolved.isEmpty) None else {
-        varGroups.find(g => unresolved.forall(g.columns.contains)) match {
-          case Some(g) => Some(MeltSpec(
-            key = Some(MeltEnd(g.name, g.desc)),
-            value = Some(MeltEnd("value")),
-            valueColumns = unresolved))
-          case None if varGroups.exists(g =>
-              unresolved.exists(g.columns.contains)) =>
-            throw new IllegalArgumentException(
-              s"$where: variable columns ${unresolved.mkString(",")} span multiple groups")
-          case None => None // unclassified columns ride along unannotated
-        }
-      }
-      val std = columns.filterNot(c =>
-        melt.exists(_.valueColumns.contains(c)))
-      (std.map(c => stdMeta.get(c) match {
-        case Some((n, d)) => ColMeta(c, n, d)
-        case None => ColMeta(c)
-      }), melt)
+    // a column listed as standard stays standard, even inside a group
+    val stdMeta: Map[String, JsonNode] = items("columns", "standard")
+      .map(e => FieldsCatalog.norm(e.get("column").asText) -> e).toMap
+    val groups = items("columns", "variable").map(e => ColumnGroup(
+      texts(e, "columns").filterNot(c => stdMeta.contains(FieldsCatalog.norm(c))),
+      MeltEnd(e.get("name").asText, opt(e, "desc")), MeltEnd("value")))
+    def meta(c: String): ColMeta = stdMeta.get(FieldsCatalog.norm(c))
+      .fold(ColMeta(c))(e => ColMeta(c, opt(e, "name"), opt(e, "desc")))
+    def lower(source: String, columns: Seq[String],
+              tokens: Seq[TokenSpec]): Command = {
+      val (cols, melt) = Lowering.split(columns, groups, meta, source)
+      Command(source = source, target = Lowering.targetFor(source),
+        cols = cols, tokens = tokens, melt = melt)
     }
 
-    def targetFor(source: String): String =
-      source.split('/').last
-        .replaceAll("\\.(txt|csv|tsv)(\\.gz)?$", "") + ".parquet"
-
-    val standardCmds = items("files", "standard").map { e =>
-      val file = e.get("file").asText
-      val (cols, melt) = colsAndMelt(texts(e, "columns"), file)
-      Command(source = file, target = targetFor(file), cols = cols,
-        melt = melt)
-    }
+    val standardCmds = items("files", "standard").map(e =>
+      lower(e.get("file").asText, texts(e, "columns"), Nil))
     val variableCmds = items("files", "variable").map { e =>
       val pattern = e.get("pattern").asText
-      val (cols, melt) = colsAndMelt(texts(e, "columns"), pattern)
-      val toks = graft.ops.Tokens.tokenNames(pattern).distinct
-        .map(t => TokenSpec(t))
-      Command(source = pattern, target = targetFor(pattern), cols = cols,
-        tokens = toks, melt = melt)
+      lower(pattern, texts(e, "columns"),
+        graft.ops.Tokens.tokenNames(pattern).distinct.map(TokenSpec(_)))
     }
     EngineManifest(standardCmds ++ variableCmds)
   }

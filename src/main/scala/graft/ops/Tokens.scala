@@ -52,19 +52,28 @@ object Tokens {
     sb.toString
   }
 
+  /** The spec of token `tok`, matched ignoring brackets and case. */
+  def specFor(tokens: Seq[TokenSpec], tok: String): Option[TokenSpec] =
+    tokens.find(_.token.stripPrefix("[").stripSuffix("]")
+      .equalsIgnoreCase(tok))
+
+  /** Output column of token `tok`: its spec's name, else the token,
+    * lowercased.
+    */
+  def columnName(tokens: Seq[TokenSpec], tok: String): String =
+    specFor(tokens, tok).flatMap(_.name).getOrElse(tok).trim match {
+      case "" => tok
+      case n  => n.toLowerCase
+    }
+
   /** Append one column per token, extracted from the input file path. */
   def withTokenColumns(df: DataFrame, pattern: String,
                        tokens: Seq[TokenSpec]): DataFrame = {
-    val names = tokenNames(pattern)
     val regex = ".*" + toRegex(
       if (pattern.startsWith("/")) pattern else "/" + pattern) + "$"
-    names.zipWithIndex.foldLeft(df) { case (acc, (tok, i)) =>
-      val spec = tokens.find(_.token.stripPrefix("[").stripSuffix("]")
-        .equalsIgnoreCase(tok))
-      val outName = spec.flatMap(_.name).getOrElse(tok).trim match {
-        case "" => tok
-        case n  => n.toLowerCase
-      }
+    tokenNames(pattern).zipWithIndex.foldLeft(df) { case (acc, (tok, i)) =>
+      val spec = specFor(tokens, tok)
+      val outName = columnName(tokens, tok)
       // input_file_name() is a percent-encoded URI; decode so a path
       // segment like "MIDDLE EAST" round-trips. Literal '+' is escaped
       // first because url_decode would turn it into a space.

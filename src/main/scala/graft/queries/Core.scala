@@ -15,7 +15,7 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * are cast back to double at the end; ranks/limits always carry an id
   * tie-break. See each oracle string for the DuckDB twin.
   */
-object CoreQueries {
+object CoreQueries extends QueryRegistry {
   def T(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 

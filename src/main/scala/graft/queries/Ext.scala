@@ -18,7 +18,7 @@ import java.nio.file.Paths
   * documents UNION deterministic mutated copies (last 2 tokens dropped,
   * doc_id + 1,000,000) — same construction on both engines.
   */
-object ExtQueries {
+object ExtQueries extends QueryRegistry {
   import CoreQueries.{T, sfName, fixDir}
 
   /** events.parquet has shipped `ts` two ways across data generations:

@@ -13,7 +13,7 @@ import java.nio.file.{Files, Paths}
   * query paired with a DuckDB oracle, floats rounded to 6 dp, sums
   * through DECIMAL, ranks tie-broken by id.
   */
-object PipeQueries {
+object PipeQueries extends QueryRegistry {
   import CoreQueries.{T, sfName, fixDir}
   import ExtQueries.{nearDupCorpus, nearDupCorpusSql, shinglesSql}
 

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * 6 dp, integer sums BIGINT-cast in the oracle, deterministic
   * tie-breaks everywhere.
   */
-object Wave10Queries {
+object Wave10Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q197

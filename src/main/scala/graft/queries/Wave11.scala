@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * query, doubles round to 6 dp, integer sums BIGINT-cast in the
   * oracle, deterministic tie-breaks everywhere.
   */
-object Wave11Queries {
+object Wave11Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q202

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * query, doubles round to 6 dp, integer sums BIGINT-cast in the
   * oracle, deterministic tie-breaks everywhere.
   */
-object Wave13Queries {
+object Wave13Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q211

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * doubles round to 6 dp, integer sums BIGINT-cast in the oracle,
   * deterministic tie-breaks everywhere.
   */
-object Wave14Queries {
+object Wave14Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q216

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * doubles round to 6 dp, integer sums BIGINT-cast in the oracle,
   * deterministic tie-breaks everywhere.
   */
-object Wave15Queries {
+object Wave15Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q220

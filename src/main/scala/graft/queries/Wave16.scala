@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * 6 dp, integer sums BIGINT-cast in the oracle, deterministic
   * tie-breaks everywhere.
   */
-object Wave16Queries {
+object Wave16Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q222

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * DuckDB oracle per query, doubles round to 6 dp, integer sums
   * BIGINT-cast in the oracle, deterministic tie-breaks everywhere.
   */
-object Wave17Queries {
+object Wave17Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q224

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * oracle per query, doubles round to 6 dp, integer sums BIGINT-cast
   * in the oracle, deterministic tie-breaks everywhere.
   */
-object Wave18Queries {
+object Wave18Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q227

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * integer sums BIGINT-cast in the oracle, fixed-point quantization
   * before any cross-row float sum, deterministic tie-breaks.
   */
-object Wave19Queries {
+object Wave19Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q229

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * BIGINT-cast in the oracle, fixed-point quantization before any
   * cross-row float sum, deterministic tie-breaks.
   */
-object Wave24Queries {
+object Wave24Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q249

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * oracle, fixed-point quantization before any cross-row float sum,
   * deterministic tie-breaks.
   */
-object Wave25Queries {
+object Wave25Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q253

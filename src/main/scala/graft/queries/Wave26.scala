@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.DecimalType
   * oracle, fixed-point quantization before any cross-row float sum,
   * deterministic tie-breaks.
   */
-object Wave26Queries {
+object Wave26Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q257

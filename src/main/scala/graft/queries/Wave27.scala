@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * BIGINT-cast in the oracle, fixed-point quantization before any
   * cross-row float sum, deterministic tie-breaks.
   */
-object Wave27Queries {
+object Wave27Queries extends QueryRegistry {
   import CoreQueries.T
 
   private def bipartiteEdges(s: SparkSession, dir: String): DataFrame = {

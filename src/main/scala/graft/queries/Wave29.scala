@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * quantization before any cross-row float sum, deterministic
   * tie-breaks.
   */
-object Wave29Queries {
+object Wave29Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q269

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.DecimalType
   * BIGINT-cast in the oracle, fixed-point quantization before any
   * cross-row float sum, deterministic tie-breaks.
   */
-object Wave31Queries {
+object Wave31Queries extends QueryRegistry {
   import CoreQueries.T
 
   private def daily(s: SparkSession, dir: String): DataFrame =

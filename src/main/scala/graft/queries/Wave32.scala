@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.DecimalType
   * BIGINT-cast in the oracle, fixed-point quantization before any
   * cross-row float sum, deterministic tie-breaks.
   */
-object Wave32Queries {
+object Wave32Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q281

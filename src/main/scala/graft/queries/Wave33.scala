@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * BIGINT-cast in the oracle, fixed-point quantization before any
   * cross-row float sum, deterministic tie-breaks.
   */
-object Wave33Queries {
+object Wave33Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q285

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.DecimalType
   * quantization before any cross-row float sum, deterministic
   * tie-breaks.
   */
-object Wave34Queries {
+object Wave34Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q289

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * integer sums BIGINT-cast in the oracle, fixed-point quantization
   * before any cross-row float sum, deterministic tie-breaks.
   */
-object Wave35Queries {
+object Wave35Queries extends QueryRegistry {
   import CoreQueries.T
 
   /** Directed ship/return graph: supplier→part for every lineitem,

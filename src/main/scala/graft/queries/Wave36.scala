@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * BIGINT-cast in the oracle, fixed-point quantization before any
   * cross-row float sum, deterministic tie-breaks.
   */
-object Wave36Queries {
+object Wave36Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q297

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * oracle, exact integer moments before any float, deterministic
   * tie-breaks (pinned argmax wherever a float would feed a ranking).
   */
-object Wave38Queries {
+object Wave38Queries extends QueryRegistry {
   import CoreQueries.T
 
   /** Daily whole-dollar totals per event type, day index 1.. from

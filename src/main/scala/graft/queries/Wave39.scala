@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * doubles round to 6 dp, integer sums BIGINT-cast in the oracle,
   * rankings pinned on exact integers before any float.
   */
-object Wave39Queries {
+object Wave39Queries extends QueryRegistry {
 
   // ---------------------------------------------------------------- q309
   /** Jaccard link prediction ([[graft.ops.Graph.jaccardLinkPred]],

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * floats rounded to 6 dp, sums through DECIMAL, ranks tie-broken by
   * id.
   */
-object Wave4Queries {
+object Wave4Queries extends QueryRegistry {
   import CoreQueries.T
 
   /** Shared DuckDB token expression (the TextAnalysis.tokens twin). */

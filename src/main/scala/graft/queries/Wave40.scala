@@ -11,7 +11,7 @@ import graft.ops.ext.TextAnalysis
   * doubles round to 6 dp, integer sums BIGINT-cast in the oracle,
   * rankings pinned on exact integers before any float.
   */
-object Wave40Queries {
+object Wave40Queries extends QueryRegistry {
   import CoreQueries.T
 
   private val tokSql =

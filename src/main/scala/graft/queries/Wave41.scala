@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * doubles round to 6 dp, integer sums BIGINT-cast in the oracle,
   * exact integer numerators wherever a ranking or sum feeds a float.
   */
-object Wave41Queries {
+object Wave41Queries extends QueryRegistry {
 
   /** Daily cent totals per event type, day index from 2024-01-01. */
   private def dailyCents(s: SparkSession, dir: String): DataFrame =

@@ -12,7 +12,7 @@ import graft.ops.ext.TextAnalysis
   * cross-row float sums quantized to integers first, deterministic
   * tie-breaks.
   */
-object Wave42Queries {
+object Wave42Queries extends QueryRegistry {
   import CoreQueries.T
 
   /** The q150 logistic-quality score + en/not-en label, shared by the

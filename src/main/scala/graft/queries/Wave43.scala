@@ -13,7 +13,7 @@ import graft.ops.ext.{Dedup, PrefixJoin, TextAnalysis}
   * rankings pinned on exact integers, largest-remainder integer
   * apportionment wherever float shares would drift.
   */
-object Wave43Queries {
+object Wave43Queries extends QueryRegistry {
   import CoreQueries.T
 
   /** Exact near-dup pairs (prefix-filter jaccard ≥ 3/5 over 5-gram

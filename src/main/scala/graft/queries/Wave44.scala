@@ -11,7 +11,7 @@ import graft.ops.ext.{Retrieval, Similarity}
   * round to 6 dp, rankings pinned on exact integers (quantized
   * millionths / 1e-9 ln terms) before any ordering.
   */
-object Wave44Queries {
+object Wave44Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q329

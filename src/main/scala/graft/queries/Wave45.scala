@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * DuckDB oracle per query, doubles round to 6 dp, every ln term
   * quantized to integers before cross-row sums or DP decisions.
   */
-object Wave45Queries {
+object Wave45Queries extends QueryRegistry {
   import CoreQueries.T
 
   private val tokSql =

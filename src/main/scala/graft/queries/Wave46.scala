@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * picks build sides). Money compares in exact cents with
   * cross-multiplied thresholds, so no float boundary can flip a row.
   */
-object Wave46Queries {
+object Wave46Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q337

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * envelopes. Same contract as every wave: DuckDB oracle per query,
   * exact integers to every rank decision, lower medians rank-pinned.
   */
-object Wave47Queries {
+object Wave47Queries extends QueryRegistry {
 
   private def dayIdx(c: org.apache.spark.sql.Column) =
     (datediff(date_trunc("day", c).cast("date"),

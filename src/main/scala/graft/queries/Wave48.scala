@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * Same contract as every wave: DuckDB oracle per query, exact
   * integers (epoch micros, cents) to every decision.
   */
-object Wave48Queries {
+object Wave48Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q345

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * quantized to 1e-9 before cross-community sums, exact-rational
   * harmonic sums (LCM-scaled), deterministic peels.
   */
-object Wave49Queries {
+object Wave49Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q349

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.DecimalType
   * order-sensitive sums go through DECIMAL, output orders tie-break
   * deterministically.
   */
-object Wave5Queries {
+object Wave5Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q122

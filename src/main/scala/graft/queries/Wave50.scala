@@ -10,7 +10,7 @@ import graft.ops.ext.{LmScore, PrefixJoin, Sharding, TextAnalysis}
   * contract as every wave: DuckDB oracle per query, exact integers to
   * every decision, rank-pinned quantile picks.
   */
-object Wave50Queries {
+object Wave50Queries extends QueryRegistry {
   import CoreQueries.T
 
   private val tokSql =

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * contract as every wave: DuckDB oracle per query, exact integers
   * to every statistic, one final double division.
   */
-object Wave51Queries {
+object Wave51Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q357

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * hash-collision audit. Same contract as every wave: DuckDB oracle
   * per query, exact integer counts into one final fixed-shape double.
   */
-object Wave52Queries {
+object Wave52Queries extends QueryRegistry {
   import CoreQueries.T
 
   private val tokSql =

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * partial correlation. Same contract as every wave: DuckDB oracle
   * per query, exact integers to every decision.
   */
-object Wave53Queries {
+object Wave53Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q365

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * pinned on exact integers, moment sums as longs into fixed-shape
   * doubles.
   */
-object Wave54Queries {
+object Wave54Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q369

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * quantized PER ROW before any sum, so every rollup is an exact
   * integer; dims broadcast (AQE), facts shuffle once per join key.
   */
-object Wave55Queries {
+object Wave55Queries extends QueryRegistry {
   import CoreQueries.T
 
   private val rev =

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * l_returnflag = 'R' — the join topology (three roles of lineitem in
   * one query) is identical.
   */
-object Wave56Queries {
+object Wave56Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q377

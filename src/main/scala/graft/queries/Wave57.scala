@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * is exactly the rewrite a correlated form must reach to survive
   * 100 TB.
   */
-object Wave57Queries {
+object Wave57Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q379

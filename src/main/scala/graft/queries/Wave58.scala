@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * (`floor(x*100+0.5)::long`) so every threshold compare is exact
   * integers-vs-double with identical IEEE arithmetic in both engines.
   */
-object Wave58Queries {
+object Wave58Queries extends QueryRegistry {
   import CoreQueries.T
 
   private def cents(c: org.apache.spark.sql.Column) =

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * both sides (DuckDB's year() is BIGINT, Spark's is INT — the hash is
   * type-sensitive).
   */
-object Wave59Queries {
+object Wave59Queries extends QueryRegistry {
   import CoreQueries.T
 
   private def revCents(ep: org.apache.spark.sql.Column,

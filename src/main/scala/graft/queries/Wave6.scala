@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.DecimalType
   * sums go through DECIMAL (or stay integral), output orders
   * tie-break deterministically.
   */
-object Wave6Queries {
+object Wave6Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q152

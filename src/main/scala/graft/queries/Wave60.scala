@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * query, exact integer sums, one fixed-shape double division per
   * reported ratio.
   */
-object Wave60Queries {
+object Wave60Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q387

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * pipeline decision). Same contract as every wave: DuckDB oracle,
   * exact integers, quantize-before-mean.
   */
-object Wave61Queries {
+object Wave61Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q390

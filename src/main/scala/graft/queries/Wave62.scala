@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * Money flows through the wave-55 cent quantization so every sum is
   * exact-integer; counts are BIGINT on both engines.
   */
-object Wave62Queries {
+object Wave62Queries extends QueryRegistry {
   import CoreQueries.T
 
   private def revCents(ep: org.apache.spark.sql.Column,

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * DECIMAL-exact accumulation, doubles only in the final closed form
   * with an identical expression tree in the oracle.
   */
-object Wave63Queries {
+object Wave63Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q399

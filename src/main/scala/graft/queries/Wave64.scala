@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * level leakage the q42/q66 n-gram gates cannot see). Both are
   * strictly linear: hash/cell bucketing only, no pair enumeration.
   */
-object Wave64Queries {
+object Wave64Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q402

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.DecimalType
   * (raking), the survey-weighting primitive a corpus-balancing pipeline
   * uses to hit target (language × source) margins.
   */
-object Wave65Queries {
+object Wave65Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q404

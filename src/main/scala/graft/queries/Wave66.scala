@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * beside q226's deletion-neighborhood and q111's token-bucket joins).
   * Both linear: one pass for the replay, a w-slot offset join for SNM.
   */
-object Wave66Queries {
+object Wave66Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q406

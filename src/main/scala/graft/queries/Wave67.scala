@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.DecimalType
   * every SUM of those terms goes through DECIMAL(38,18), so fold order
   * never changes the estimate.
   */
-object Wave67Queries {
+object Wave67Queries extends QueryRegistry {
   import CoreQueries.T
 
   private val Dec = DecimalType(38, 18)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * GramMoments pass; the oracle replays the q146 split-long gram
   * construction and takes the Frobenius block ratios.
   */
-object Wave68Queries {
+object Wave68Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q410

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * rows and cents while collapsing its file count, and v1 must stay
   * readable (time travel) after both.
   */
-object Wave69Queries {
+object Wave69Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q411

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * doubles round to 6 dp, order-sensitive sums go through DECIMAL (or
   * stay integral), output orders tie-break deterministically.
   */
-object Wave7Queries {
+object Wave7Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q167

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * q411's append/time-travel/compaction census they make
   * [[graft.io.TxLog]] a complete minimal lake sink.
   */
-object Wave70Queries {
+object Wave70Queries extends QueryRegistry {
   import CoreQueries.T
 
   private def rmTree(table: String): Unit = {

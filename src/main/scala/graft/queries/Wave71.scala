@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.DecimalType
   * repeated class compressing strictly better than the originals (the
   * separation the gate exists to detect).
   */
-object Wave71Queries {
+object Wave71Queries extends QueryRegistry {
   import CoreQueries.T
 
   private def deflateLen(c: Column): Column = {

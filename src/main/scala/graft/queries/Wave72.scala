@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * minimal lake: append, time travel, compact, change feed, merge,
   * vacuum, data skipping.
   */
-object Wave72Queries {
+object Wave72Queries extends QueryRegistry {
   import CoreQueries.T
 
   private def rmTree(table: String): Unit = {

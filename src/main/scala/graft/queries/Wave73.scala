@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * ever assembling on one node. q417 covers scalar columns, q418 the
   * rank-2 embedding-matrix layout.
   */
-object Wave73Queries {
+object Wave73Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q417

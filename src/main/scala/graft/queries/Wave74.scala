@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * deployment actually schedules: append, merge, time travel, change
   * feed, point/range data skipping, compaction policy, vacuum.
   */
-object Wave74Queries {
+object Wave74Queries extends QueryRegistry {
   import CoreQueries.T
 
   private def rmTree(table: String): Unit = {

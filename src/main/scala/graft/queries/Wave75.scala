@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * change feed per batch, and zone-map data skipping over the
   * committed history.
   */
-object Wave75Queries {
+object Wave75Queries extends QueryRegistry {
   import CoreQueries.T
 
   private def rmTree(table: String): Unit = {

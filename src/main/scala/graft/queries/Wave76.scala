@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * history audit (DESCRIBE HISTORY from the O(versions) log alone —
   * append vs rewrite classification without touching data).
   */
-object Wave76Queries {
+object Wave76Queries extends QueryRegistry {
   import CoreQueries.T
 
   private def rmTree(table: String): Unit = {

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * rewrites the overlapping commits only; disjoint data is carried by
   * reference, zero bytes copied).
   */
-object Wave77Queries {
+object Wave77Queries extends QueryRegistry {
   import CoreQueries.T
 
   private def rmTree(table: String): Unit = {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * constraints (NOT NULL / CHECK / unique-key) gating a table-log
   * commit in one distributed audit pass.
   */
-object Wave78Queries {
+object Wave78Queries extends QueryRegistry {
   import CoreQueries.T
 
   private def rmTree(table: String): Unit = {

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * table log (readStream → foreachBatch → MERGE per micro-batch: the
   * CDC-apply pattern landing in a versioned lake table).
   */
-object Wave79Queries {
+object Wave79Queries extends QueryRegistry {
   import CoreQueries.T
 
   private def rmTree(table: String): Unit = {

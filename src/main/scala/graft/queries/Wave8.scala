@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * oracle per query, doubles round to 6 dp, integer sums stay integral
   * (BIGINT-cast in the oracle), deterministic tie-breaks.
   */
-object Wave8Queries {
+object Wave8Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q176

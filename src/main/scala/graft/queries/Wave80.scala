@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * pass, persisted as an O(columns) version-tied sidecar and served
   * back without touching data).
   */
-object Wave80Queries {
+object Wave80Queries extends QueryRegistry {
   import CoreQueries.T
 
   private def rmTree(table: String): Unit = {

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * including across rewrites where the append-only change feed does
   * not apply).
   */
-object Wave81Queries {
+object Wave81Queries extends QueryRegistry {
   import CoreQueries.T
 
   private def rmTree(table: String): Unit = {

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   *     recompute — upgrading those rows-only sf1 records to value
   *     checks.
   */
-object Wave82Queries {
+object Wave82Queries extends QueryRegistry {
 
   // ---------------------------------------------------------------- q436
   /** The q272 prefix-filter kernel ([[graft.ops.ext.PrefixJoin

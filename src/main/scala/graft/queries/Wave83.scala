@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *    rows whose zone column is NULL are OUTSIDE every [lo, hi] range
   *    and survive the rewrite of touched directories.
   */
-object Wave83Queries {
+object Wave83Queries extends QueryRegistry {
   import CoreQueries.T
 
   private def rmTree(table: String): Unit = {

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   *    the k×-cheaper signature pass, gated by the q14-pattern
   *    invariant (mutated near-copies must estimate similar).
   */
-object Wave84Queries {
+object Wave84Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q440

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *    broken signature (bin misassignment, wrong min) collapses
   *    recall and fails the hash.
   */
-object Wave85Queries {
+object Wave85Queries extends QueryRegistry {
   import CoreQueries.T
 
   private def rmTree(table: String): Unit = {

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *    eval-set n-grams → broadcast m-bit filter → one map-side train
   *    scan; flags by integer-exact hit-fraction threshold.
   */
-object Wave86Queries {
+object Wave86Queries extends QueryRegistry {
   import CoreQueries.T
 
   private def rmTree(table: String): Unit = {

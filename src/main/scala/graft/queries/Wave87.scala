@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *    APPEND-ONLY eval suite at O(delta) cost, proven equal to the
   *    full rebuild.
   */
-object Wave87Queries {
+object Wave87Queries extends QueryRegistry {
   import CoreQueries.T
 
   private def rmTree(table: String): Unit = {

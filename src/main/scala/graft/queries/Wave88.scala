@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   *    truncated search vs full-width search, per query — the table
   *    that sizes an embedding store.
   */
-object Wave88Queries {
+object Wave88Queries extends QueryRegistry {
   import CoreQueries.T
 
   private def rmTree(table: String): Unit = {

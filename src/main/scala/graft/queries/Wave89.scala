@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * orphan scan is one directory listing joined against the log — at
   * 100 TB none of them reads data files at all.
   */
-object Wave89Queries {
+object Wave89Queries extends QueryRegistry {
   import CoreQueries.T
 
   private def rmTree(table: String): Unit = {

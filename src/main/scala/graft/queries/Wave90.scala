@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *    revenue — pair work bounded by the CALENDAR (months²), not the
   *    data volume, and the median window partitioned per group.
   */
-object Wave90Queries {
+object Wave90Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q457

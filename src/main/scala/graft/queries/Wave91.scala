@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *    mass, and Turing coverage per source from the frequency spectrum —
   *    the "is this source's vocabulary exhausted" table.
   */
-object Wave91Queries {
+object Wave91Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q460

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *    over the embedding corpus with exact integer systematic draws
   *    and inverse-probability weights.
   */
-object Wave92Queries {
+object Wave92Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q463

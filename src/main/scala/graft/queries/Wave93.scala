@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *    dropping documents — duplication mass from winnowing-fingerprint
   *    document frequency, linear cost, no pair materialization.
   */
-object Wave93Queries {
+object Wave93Queries extends QueryRegistry {
   import CoreQueries.T
 
   // ---------------------------------------------------------------- q466

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *    from the needle's document" — the standard passage-retrieval
   *    sanity test, composed end-to-end from the suite's own operators.
   */
-object Wave94Queries {
+object Wave94Queries extends QueryRegistry {
   import CoreQueries.T
 
   private val toksSql =

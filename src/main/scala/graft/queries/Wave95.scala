@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *    against the base distribution (χ² terms) — the health check that
   *    says when an ANN index needs re-training.
   */
-object Wave95Queries {
+object Wave95Queries extends QueryRegistry {
   import CoreQueries.T
 
   private val toksSql =

@@ -114,6 +114,29 @@ class AnnotatorSpec extends AnyFunSuite {
     assert(e.getMessage.contains("matches no files"))
   }
 
+  test("annotator and classification dialect lower a group plus an unclassified column alike") {
+    val root = Files.createTempDirectory("graft-agree")
+    Files.createDirectories(root.resolve("data"))
+    Files.write(root.resolve("data/counts.tsv"),
+      "sampleA\tsampleB\tnote\n10\t20\tx\n".getBytes)
+    val cfg = Annotator.Config.parse(
+      """{"variable_columns": [{"columns": ["sampleA", "sampleB"],
+        |  "name": "sample", "desc": "reads"}]}""".stripMargin)
+    val annotated = Annotator.annotate(root.toString, cfg, FieldsCatalog(Nil))
+      .manifest.commands
+    val classified = ManifestParser.parse("""{
+      "files": {"standard": [{"file": "data/counts.tsv",
+                              "columns": ["sampleA", "sampleB", "note"]}],
+                "variable": []},
+      "columns": {"standard": [],
+        "variable": [{"columns": ["sampleA", "sampleB"], "name": "sample",
+                      "desc": "reads"}]}}""").commands
+    val shape = (c: graft.model.Command) => (c.source, c.target, c.cols, c.melt)
+    assert(annotated.map(shape) == classified.map(shape))
+    assert(annotated.head.cols.map(_.col) == Seq("note"))
+    assert(annotated.head.melt.get.valueColumns == Seq("samplea", "sampleb"))
+  }
+
   test("variable columns spanning two groups is an error") {
     val root = fixture()
     val bad = Annotator.Config.parse(

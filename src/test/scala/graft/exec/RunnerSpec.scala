@@ -2,6 +2,7 @@ package graft.exec
 
 import graft.TestSpark
 import graft.model.ManifestParser
+import org.apache.spark.sql.types.DoubleType
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -60,6 +61,53 @@ class RunnerSpec extends AnyFunSuite {
       """[{"source":"data/t.csv","target":"t.parquet","where":"a > 2"}]""")
     val df = Runner.plan(spark, m.commands.head, data.toString)
     assert(df.count() == 1)
+  }
+
+  test("a renamed token column stays an id of a melt without columns") {
+    val root = Files.createTempDirectory("graft-tokname")
+    val data = root.resolve("data")
+    for (g <- Seq("G1", "G2")) {
+      val d = data.resolve("m").resolve(g)
+      Files.createDirectories(d)
+      Files.write(d.resolve("s.txt"),
+        "sgrna\tscore\tlfc\nr1\t0.5\t-1.0\nr2\t0.7\t2.0\n".getBytes)
+    }
+    // the emitted dialect's own shape: a named token, a melt of "the rest"
+    val m = ManifestParser.parse(
+      """{"commands":[{"command":"hot.Parquet","params":{
+        |"source":"data/m/[GENE]/s.txt","target":"out.parquet",
+        |"cols":[{"col":"sgrna"}],
+        |"concat":[{"token":"GENE","name":"Gene Symbol"}],
+        |"melt":{"key":{"name":"metric"},"value":{"name":"value"}}}}]}""".stripMargin)
+    val out = root.resolve("out").toString
+    Runner.run(spark, m, data.toString, out)
+    val back = spark.read.parquet(s"$out/out.parquet")
+    assert(back.columns.toSeq == Seq("sgrna", "gene symbol", "metric", "value"))
+    assert(back.count() == 8) // 2 files x 2 rows x 2 melted cols
+    assert(back.schema("value").dataType == DoubleType)
+  }
+
+  test("classification dialect runs mixed-case variable columns") {
+    val root = Files.createTempDirectory("graft-mixed")
+    val data = root.resolve("data")
+    Files.createDirectories(data)
+    Files.write(data.resolve("counts.tsv"),
+      "sgRNA\tsampleA\tsampleB\ns1\t10\t20\ns2\t30\t40\n".getBytes)
+    val m = ManifestParser.parse("""{
+      "files": {"standard": [{"file": "data/counts.tsv",
+                              "columns": ["sgRNA", "sampleA", "sampleB"]}],
+                "variable": []},
+      "columns": {
+        "standard": [{"column": "sgRNA", "name": "sgRNA", "desc": "guide"}],
+        "variable": [{"columns": ["sampleA", "sampleB"], "name": "sample",
+                      "desc": "sample reads"}]}}""")
+    val out = root.resolve("out").toString
+    Runner.run(spark, m, data.toString, out)
+    val back = spark.read.parquet(s"$out/counts.parquet")
+    assert(back.columns.toSeq == Seq("sgrna", "sample", "value"))
+    assert(back.count() == 4)
+    assert(back.select("sample").distinct().collect().map(_.getString(0))
+      .sorted.toSeq == Seq("samplea", "sampleb"))
   }
 }
 

@@ -67,6 +67,20 @@ class ManifestParserSpec extends AnyFunSuite {
     assert(v.cols.map(_.col) == Seq("sgrna", "gene"))
   }
 
+  test("classification dialect melts a group beside an unclassified column") {
+    val m = ManifestParser.parse("""{
+      "files": {"standard": [{"file": "counts.tsv",
+                              "columns": ["sampleA", "sampleB", "note"]}],
+                "variable": []},
+      "columns": {"standard": [],
+        "variable": [{"columns": ["sampleA", "sampleB"], "name": "sample",
+                      "desc": "reads"}]}}""")
+    val c = m.commands.head
+    assert(c.cols == Seq(ColMeta("note")))
+    assert(c.melt.contains(MeltSpec(Some(MeltEnd("sample", Some("reads"))),
+      Some(MeltEnd("value")), Seq("samplea", "sampleb"))))
+  }
+
   test("malformed classification manifest fails with pointed errors") {
     val bad = """{
       "files": {"standard": [{"columns": ["a", 3]}], "variable": []},
